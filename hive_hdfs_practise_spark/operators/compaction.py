@@ -26,10 +26,14 @@ import json
 import os
 import re
 import shutil
-import uuid
 from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
+
+# compaction target file size, and the fraction of it below which a
+# file counts as small
+TARGET_BYTES = 128 * 1024 * 1024
+SMALL_THRESHOLD = 0.5
 
 
 @dataclass
@@ -54,8 +58,8 @@ class BucketCompactionStats:
 
 def plan_compaction_files(
     files: list,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
+    target_bytes: int = TARGET_BYTES,
+    small_threshold: float = SMALL_THRESHOLD,
 ) -> CompactionPlan:
     """FFD bin-pack an explicit file list (the core shared by the
     directory planner and the per-bucket table compactor)."""
@@ -85,8 +89,8 @@ def plan_compaction_files(
 
 def plan_compaction(
     path: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
+    target_bytes: int = TARGET_BYTES,
+    small_threshold: float = SMALL_THRESHOLD,
 ) -> CompactionPlan:
     """Bin-pack every parquet file under ``path`` smaller than
     ``small_threshold * target_bytes`` into ``target_bytes`` bins,
@@ -104,8 +108,8 @@ def compact_parquet(
     spark: SparkSession,
     path: str,
     out: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
+    target_bytes: int = TARGET_BYTES,
+    small_threshold: float = SMALL_THRESHOLD,
 ) -> CompactionPlan:
     """Execute ``plan_compaction``: each bin becomes one output file
     under ``out``; untouched files are NOT rewritten (a production
@@ -135,8 +139,7 @@ def bucket_id_of(file_name: str) -> int | None:
 
 
 def table_location(spark: SparkSession, table: str) -> str:
-    """Filesystem path of a managed table (the warehouse-dir dance
-    shared with write_minhash_index / write_ivf_index)."""
+    """Filesystem path of a managed table in the session warehouse."""
     from urllib.parse import urlparse
 
     wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
@@ -149,8 +152,8 @@ def publish_replacing(
     path: str, src: str, originals: list, dest_name: str
 ) -> None:
     """Crash-safe publish of a rewritten file that REPLACES a set of
-    original files in the same directory (shared by
-    ``compact_bucketed_table`` and ``vacuum_ivf_index``). Multi-file
+    original files in the same directory (every per-bucket rewrite in
+    ``bucketed_index`` goes through it). Multi-file
     swaps have no atomic rename, so the protocol writes a tiny
     MANIFEST first and every crash window is mechanically recoverable
     by ``recover_inprogress``:
@@ -262,11 +265,7 @@ def recover_inprogress(path: str) -> int:
 
 
 def compact_bucketed_table(
-    spark: SparkSession,
-    table: str,
-    target_bytes: int = 128 * 1024 * 1024,
-    small_threshold: float = 0.5,
-    max_parallel: int = 8,
+    spark: SparkSession, table: str
 ) -> BucketCompactionStats:
     """Compact a BUCKETED managed table in place — the maintenance op
     that completes the index lifecycle (write → probe → append →
@@ -274,81 +273,30 @@ def compact_bucketed_table(
     files next to the existing ones, and without compaction the file
     count grows linearly with appends forever.
 
-    Correctness invariant: files merge only WITHIN a bucket (every
-    row of bucket N's files already hashes to N, so their union is
-    still a valid bucket-N file), and each replacement file is named
-    with the same ``_<bucket id>`` encoding the bucketed reader
-    parses — so the exchange-free bucketed scan survives compaction
-    byte-for-byte semantically (pinned by the unchanged probe oracle
-    and the no-exchange plan assertion in tests).
+    Each bucket's files are FFD-planned on their own; every bin of
+    two or more files becomes one replacement file of that bucket
+    through ``bucketed_index.rewrite_buckets``, so the exchange-free
+    bucketed scan survives (pinned by the unchanged probe oracle and
+    the no-exchange plan assertion in tests). Rewrite cost is
+    proportional to small-file bytes, never table bytes; files
+    at/above the threshold, or alone in their bin, are never read."""
+    from .bucketed_index import bucket_files, rewrite_buckets
 
-    Scale shape: each FFD bin is one independent read-coalesce-write
-    job over ONLY that bin's files (rewrite cost ∝ small-file bytes,
-    never table bytes); bins run concurrently on a bounded thread
-    pool exactly as a production maintenance scheduler would fan them
-    out across a cluster. Untouched files (at/above threshold, or
-    alone in their bin) are never read or rewritten."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    path = table_location(spark, table)
-    recover_inprogress(path)
-    names = [f for f in os.listdir(path) if f.endswith(".parquet")]
-    by_bucket: dict = {}
-    for f in names:
-        b = bucket_id_of(f)
-        if b is not None:
-            by_bucket.setdefault(b, []).append(os.path.join(path, f))
+    by_bucket = bucket_files(spark, table)
+    files = [f for fs in by_bucket.values() for f in fs]
     stats = BucketCompactionStats(
-        n_files_before=len(names),
-        total_bytes=sum(
-            os.path.getsize(os.path.join(path, f)) for f in names
-        ),
+        n_files_before=len(files),
+        total_bytes=sum(os.path.getsize(f) for f in files),
     )
-    tmp_root = path + ".compact.tmp"
-    shutil.rmtree(tmp_root, ignore_errors=True)
-
-    def _merge(job) -> int:
-        b, i, group = job
-        out_dir = os.path.join(tmp_root, f"b{b:05d}-{i:05d}")
-        (
-            spark.read.parquet(*group)
-            .coalesce(1)
-            .write.mode("overwrite")
-            .parquet(out_dir)
-        )
-        outs = [f for f in os.listdir(out_dir) if f.endswith(".parquet")]
-        assert len(outs) == 1, outs
-        # manifest-backed publish (publish_replacing): every crash
-        # window is recovered mechanically by recover_inprogress at
-        # the next maintenance entry — never silent loss, never
-        # duplication (r11 advice closed).
-        publish_replacing(
-            path,
-            os.path.join(out_dir, outs[0]),
-            group,
-            f"part-{i:05d}-{uuid.uuid4().hex}_{b:05d}.c000.snappy.parquet",
-        )
-        return sum(1 for _ in group)
-
-    jobs = []
+    groups = []
     for b, fs in sorted(by_bucket.items()):
-        plan = plan_compaction_files(
-            sorted(fs), target_bytes, small_threshold
-        )
+        plan = plan_compaction_files(fs, TARGET_BYTES, SMALL_THRESHOLD)
         bins = [g for g in plan.bins if len(g) >= 2]
         if bins:
             stats.n_buckets_touched += 1
-            for i, group in enumerate(bins):
-                stats.bytes_rewritten += sum(
-                    os.path.getsize(g) for g in group
-                )
-                jobs.append((b, i, group))
-    if jobs:
-        with ThreadPoolExecutor(max_workers=max_parallel) as ex:
-            list(ex.map(_merge, jobs))
-    shutil.rmtree(tmp_root, ignore_errors=True)
-    spark.sql(f"REFRESH TABLE {table}")
-    stats.n_files_after = sum(
-        1 for f in os.listdir(path) if f.endswith(".parquet")
-    )
+        for group in bins:
+            stats.bytes_rewritten += sum(os.path.getsize(g) for g in group)
+            groups.append((b, group))
+    rewrite_buckets(spark, table, groups)
+    stats.n_files_after = sum(len(fs) for fs in bucket_files(spark, table).values())
     return stats

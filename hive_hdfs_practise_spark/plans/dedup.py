@@ -37,6 +37,7 @@ from ..dedup import minhash as mh
 from ..functions import simhash as sh
 from ..functions import text as tx
 from ..functions import vectors as vec
+from ..operators import bucketed_index as bi
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K  # noqa: F401  (re-export)
 from .registry import register
@@ -341,27 +342,21 @@ def _est_prefilter(cand: DataFrame, sigs: DataFrame) -> DataFrame:
     )
 
 
-def _indexed_pairs(spark, sf_dir, table_prefix, post=None, tombstones=False):
+def _indexed_pairs(spark, sf_dir, table_prefix, post=None):
     """Verified (doc_a, doc_b, jaccard) pairs probed from a WRITTEN
     unblocked band index — the ONE probe implementation shared by
     dedup_minhash_indexed, dedup_minhash_index_append, and
-    dedup_cross_source_indexed (r10 review dedup — three copies had
-    started to drift-risk): bucketed exchange-free candidate
+    dedup_cross_source_indexed: bucketed exchange-free candidate
     grouping under a scoped autoBucketedScan=false, shared
     agreement prefilter + exact-Jaccard verify. ``post`` runs INSIDE
     the conf scope (a transform applied after build_with_conf would
     recompile the plan under the restored conf and lose the
-    bucketed-scan pin). With ``tombstones`` the probe anti-joins the
-    ``{prefix}_dels`` table's doc_ids out of the band rows first — a
-    tiny broadcast anti-join (map-side, so the exchange-free pin
-    survives; deleted ids cannot then appear in any candidate)."""
-    from ..operators.confscope import build_with_conf
+    bucketed-scan pin). Tombstoned doc_ids are anti-joined out of the
+    band rows (``bucketed_index.live_rows``), so deleted ids cannot
+    appear in any candidate."""
 
     def _probe() -> DataFrame:
-        banded = spark.table(f"{table_prefix}_bands")
-        if tombstones:
-            dels = spark.table(f"{table_prefix}_dels").select("doc_id")
-            banded = banded.join(F.broadcast(dels), "doc_id", "left_anti")
+        banded = bi.live_rows(spark, table_prefix, bi.MINHASH)
         cand = mh.pairs_within_buckets(banded, "doc_id", ["band", "band_key"])
         sigs = spark.table(f"{table_prefix}_sigs")
         pre = _est_prefilter(cand, sigs)
@@ -369,12 +364,7 @@ def _indexed_pairs(spark, sf_dir, table_prefix, post=None, tombstones=False):
         pairs = exact_jaccard_pairs(pre, docs)
         return post(pairs) if post is not None else pairs
 
-    return build_with_conf(
-        spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
-        _probe,
-    )
+    return bi.bucketed_probe(spark, _probe)
 
 
 @register("dedup_minhash_indexed", oracle=_minhash_lsh_oracle())
@@ -559,7 +549,7 @@ def probe_minhash_index(
             mh.lsh_bands(F.col("sig"), N_BANDS, ROWS_PER_BAND, family)
         ).alias("band", "band_key"),
     )
-    idx = spark.table(f"{table_prefix}_bands")
+    idx = bi.live_rows(spark, table_prefix, bi.MINHASH)
     # the delta's banded rows broadcast; the index streams map-side —
     # no shuffle of the (much larger) index ever happens
     cand = (
@@ -712,12 +702,12 @@ def dedup_minhash_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Index DELETE — the last lifecycle verb (write → probe → append
     → compact → DELETE), done the way every immutable-file index does
     it (the LSM/tombstone pattern): retracted doc_ids append to a
-    tiny ``_dels`` table and the probe anti-joins them out of the
+    tiny tombstone table and the probe anti-joins them out of the
     band rows (broadcast, map-side — the exchange-free candidate
     grouping survives, plan-pinned in test_dedup). Nothing in the
     bands/sigs tables is read or rewritten — a delete costs one tiny
     append no matter the index size (byte-stability pinned); dead
-    rows are reclaimed at the next rebuild/compaction.
+    rows are reclaimed by ``bucketed_index.vacuum`` or the next rebuild.
 
     Certification: build the FULL-corpus index, tombstone the
     md5-nibble-'{DELETE_NIBBLE}' shard, probe — the output must equal
@@ -742,10 +732,8 @@ def dedup_minhash_index_delete(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         == DELETE_NIBBLE
     ).select("doc_id")
-    mh.delete_from_minhash_index(spark, dels, "minhash_del_idx")
-    return _indexed_pairs(
-        spark, sf_dir, "minhash_del_idx", tombstones=True
-    )
+    bi.delete(dels, "minhash_del_idx", bi.MINHASH)
+    return _indexed_pairs(spark, sf_dir, "minhash_del_idx")
 
 
 def _dedup_cost_oracle() -> str:

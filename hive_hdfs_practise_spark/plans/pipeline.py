@@ -297,7 +297,7 @@ def documents_dedup_pipeline_indexed(
     rather than re-banding the corpus per run. Builder writes the
     index at plan time: BUILD_EXECUTES."""
     from ..dedup import minhash as mh
-    from ..operators.confscope import build_with_conf
+    from ..operators import bucketed_index as bi
     from .constants import N_BANDS, N_PERM, ROWS_PER_BAND
 
     family = mh.minhash_family(sf_dir)
@@ -319,7 +319,7 @@ def documents_dedup_pipeline_indexed(
     )
 
     def _probe() -> DataFrame:
-        banded = spark.table("pipeline_dedup_idx_bands")
+        banded = bi.live_rows(spark, "pipeline_dedup_idx", bi.MINHASH)
         cand = mh.pairs_within_buckets(
             banded, "doc_id", ["lang", "band", "band_key"]
         )
@@ -353,10 +353,5 @@ def documents_dedup_pipeline_indexed(
             .localCheckpoint(eager=True)
         )
 
-    pairs = build_with_conf(
-        spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
-        _probe,
-    )
+    pairs = bi.bucketed_probe(spark, _probe)
     return _pipeline_tail(uniq, pairs)

@@ -495,7 +495,7 @@ def knn_ivf_index_append_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_ivf_index(
         spark, corpus, "ivf_append_idx", nlist=IVF_NLIST, iters=IVF_ITERS
     )
-    append_ivf_index(spark, delta, "ivf_append_idx", nlist=IVF_NLIST)
+    append_ivf_index(spark, delta, "ivf_append_idx")
     return knn_ivf_indexed(
         spark, "ivf_append_idx", QUERY_VEC_ID, TOP_K, nprobe=IVF_NPROBE
     )
@@ -535,7 +535,7 @@ def knn_ivf_index_compact_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     write_ivf_index(
         spark, corpus, "ivf_compact_idx", nlist=IVF_NLIST, iters=IVF_ITERS
     )
-    append_ivf_index(spark, delta, "ivf_compact_idx", nlist=IVF_NLIST)
+    append_ivf_index(spark, delta, "ivf_compact_idx")
     compact_bucketed_table(spark, "ivf_compact_idx_assign")
     return knn_ivf_indexed(
         spark, "ivf_compact_idx", QUERY_VEC_ID, TOP_K, nprobe=IVF_NPROBE
@@ -564,16 +564,15 @@ def knn_ivf_index_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifecycle symmetry with the minhash index (write → probe → append
     → compact → DELETE; r11 verdict item 1), done the LSM/tombstone
     way (`dedup_minhash_index_delete`'s mold): retracted vec_ids
-    append to a tiny ``_dels`` table
-    (``similarity/knn.py::delete_from_ivf_index``) and the probe
+    append to a tiny tombstone table
+    (``operators/bucketed_index.py::delete``) and the probe
     broadcast-anti-joins them out of the assignment scan map-side —
     the bucket-pruned, exchange-free probe plan survives (plan-pinned
     in test_similarity). Nothing in ``_assign``/``_centroids`` is
     read or rewritten — a delete costs one tiny append no matter the
     index size (content-hash byte-stability pinned); dead rows are
-    reclaimed by ``vacuum_ivf_index`` (which, unlike the band index's
-    full-rewrite vacuum, rewrites ONLY the affected cluster buckets —
-    an inverted list vacuums incrementally) or the next rebuild.
+    reclaimed by ``bucketed_index.vacuum`` (which rewrites ONLY the
+    cluster buckets holding deleted vectors) or the next rebuild.
 
     Certification: build the FULL-corpus index, tombstone the
     md5-nibble-'f' shard, probe — the output must equal the frozen
@@ -583,11 +582,8 @@ def knn_ivf_index_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     predates the deletes), which it can only do if the tombstone
     filter removes exactly the deleted vectors from the probed lists.
     Builder writes + deletes at plan time: BUILD_EXECUTES."""
-    from ..similarity.knn import (
-        delete_from_ivf_index,
-        knn_ivf_indexed,
-        write_ivf_index,
-    )
+    from ..operators import bucketed_index as bi
+    from ..similarity.knn import knn_ivf_indexed, write_ivf_index
 
     e = wide_table(spark, sf_dir, "embeddings")
     write_ivf_index(
@@ -597,14 +593,9 @@ def knn_ivf_index_delete_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         == IVF_DELETE_NIBBLE
     ).select("vec_id")
-    delete_from_ivf_index(spark, dels, "ivf_del_idx")
+    bi.delete(dels, "ivf_del_idx", bi.IVF)
     return knn_ivf_indexed(
-        spark,
-        "ivf_del_idx",
-        QUERY_VEC_ID,
-        TOP_K,
-        nprobe=IVF_NPROBE,
-        tombstones=True,
+        spark, "ivf_del_idx", QUERY_VEC_ID, TOP_K, nprobe=IVF_NPROBE
     )
 
 

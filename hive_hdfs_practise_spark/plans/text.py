@@ -268,7 +268,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     time: BUILD_EXECUTES."""
     from ..dedup import minhash as mh
     from ..dedup.clusters import connected_components
-    from ..operators.confscope import build_with_conf
+    from ..operators import bucketed_index as bi
     from .constants import N_BANDS, N_PERM, ROWS_PER_BAND, SHINGLE_K
     from .dedup import _verify_pairs_full_shingles
 
@@ -288,7 +288,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     def _probe() -> DataFrame:
-        banded = spark.table("minhash_fam_idx_bands")
+        banded = bi.live_rows(spark, "minhash_fam_idx", bi.MINHASH)
         cand = mh.pairs_within_buckets(
             banded, "doc_id", ["lang", "band", "band_key"]
         )
@@ -305,12 +305,7 @@ def dedup_survivors_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.row_number().over(w) == 1).alias("is_survivor"),
         )
 
-    return build_with_conf(
-        spark,
-        "spark.sql.sources.bucketing.autoBucketedScan.enabled",
-        "false",
-        _probe,
-    )
+    return bi.bucketed_probe(spark, _probe)
 
 
 def _lang_oracle() -> str:

@@ -1603,6 +1603,7 @@ class TestIndexDelete:
 
         from hive_hdfs_practise_spark import plans as P
         from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
         from hive_hdfs_practise_spark.operators.compaction import (
             table_location,
         )
@@ -1644,16 +1645,14 @@ class TestIndexDelete:
             .collect()
         }
         assert deleted_ids
-        mh.delete_from_minhash_index(
-            spark, d.where(nib == DELETE_NIBBLE).select("doc_id"),
-            "minhash_del_test_idx",
+        bi.delete(
+            d.where(nib == DELETE_NIBBLE).select("doc_id"),
+            "minhash_del_test_idx", bi.MINHASH,
         )
         # (a) bands/sigs byte-stable — a delete rewrites nothing
         assert snap("_bands") == before_b and snap("_sigs") == before_s
         # (b) probe excludes exactly the deleted docs
-        pairs = _indexed_pairs(
-            spark, sf, "minhash_del_test_idx", tombstones=True
-        )
+        pairs = _indexed_pairs(spark, sf, "minhash_del_test_idx")
         got = {(r.doc_a, r.doc_b) for r in pairs.collect()}
         want = {
             (r.doc_a, r.doc_b)
@@ -1666,15 +1665,7 @@ class TestIndexDelete:
             "spark.sql.sources.bucketing.autoBucketedScan.enabled", "false"
         )
         try:
-            banded = spark.table("minhash_del_test_idx_bands").join(
-                F.broadcast(
-                    spark.table("minhash_del_test_idx_dels").select(
-                        "doc_id"
-                    )
-                ),
-                "doc_id",
-                "left_anti",
-            )
+            banded = bi.live_rows(spark, "minhash_del_test_idx", bi.MINHASH)
             cand = mh.pairs_within_buckets(
                 banded, "doc_id", ["band", "band_key"]
             )
@@ -1689,6 +1680,42 @@ class TestIndexDelete:
         mh.write_minhash_index(spark, d, "minhash_del_test_idx", **kw)
         assert not spark.catalog.tableExists("minhash_del_test_idx_dels")
 
+    def test_default_probes_exclude_deleted(self, spark):
+        """Probes take no tombstone flag: called with default
+        arguments on an index with live tombstones, neither the
+        indexed pair probe nor the delta probe returns a deleted id."""
+        from conftest import SF_DIR
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
+        from hive_hdfs_practise_spark.plans.dedup import (
+            DELETE_NIBBLE,
+            _indexed_pairs,
+            probe_minhash_index,
+        )
+        from hive_hdfs_practise_spark.sources.catalog import wide_table
+
+        sf = SF_DIR
+        docs = wide_table(spark, sf, "documents")
+        d = docs.select("doc_id", "text")
+        mh.write_minhash_index(
+            spark, d, "minhash_dflt_test_idx", downsample=4, family="md5"
+        )
+        nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+        deleted = d.where(nib == DELETE_NIBBLE).select("doc_id")
+        del_ids = {r.doc_id for r in deleted.collect()}
+        bi.delete(deleted, "minhash_dflt_test_idx", bi.MINHASH)
+        pairs = _indexed_pairs(spark, sf, "minhash_dflt_test_idx").collect()
+        assert pairs
+        assert not {r.doc_a for r in pairs} & del_ids
+        assert not {r.doc_b for r in pairs} & del_ids
+        # the delta probe: every document, deleted ones included,
+        # probes the index; no deleted id may come back as a match
+        hits = probe_minhash_index(
+            spark, d, "minhash_dflt_test_idx", docs, "md5"
+        ).collect()
+        assert hits
+        assert not {r.doc_corpus for r in hits} & del_ids
+
 
 class TestIndexVacuum:
     """r11: vacuum folds the tombstones into a rewrite — the
@@ -1697,6 +1724,7 @@ class TestIndexVacuum:
 
     def test_vacuum_parity_and_cleanup(self, spark):
         from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
         from hive_hdfs_practise_spark.plans.constants import (
             N_BANDS,
             N_PERM,
@@ -1718,16 +1746,14 @@ class TestIndexVacuum:
         mh.write_minhash_index(spark, d, "minhash_vac_test_idx", **kw)
         nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
         deleted = d.where(nib == DELETE_NIBBLE).select("doc_id")
-        mh.delete_from_minhash_index(
-            spark, deleted, "minhash_vac_test_idx"
-        )
+        bi.delete(deleted, "minhash_vac_test_idx", bi.MINHASH)
         before = {
             (r.doc_a, r.doc_b)
             for r in _indexed_pairs(
-                spark, sf, "minhash_vac_test_idx", tombstones=True
+                spark, sf, "minhash_vac_test_idx"
             ).collect()
         }
-        n = mh.vacuum_minhash_index(spark, "minhash_vac_test_idx")
+        n = bi.vacuum(spark, "minhash_vac_test_idx", bi.MINHASH)
         assert n == deleted.count() > 0
         # (a) the tombstone table is gone; a plain probe (no
         # anti-join) now returns the tombstoned probe's pairs
@@ -1762,7 +1788,34 @@ class TestIndexVacuum:
                 "true",
             )
         # (d) idempotent: a second vacuum is a no-op
-        assert mh.vacuum_minhash_index(spark, "minhash_vac_test_idx") == 0
+        assert bi.vacuum(spark, "minhash_vac_test_idx", bi.MINHASH) == 0
+
+    def test_vacuum_keeps_bucket_spec(self, spark):
+        """The vacuum reads the bucket spec the index was written with:
+        an 8-bucket index stays 8 buckets, so the next append (which
+        must match the table's bucketing) still succeeds."""
+        from conftest import SF_DIR
+        from hive_hdfs_practise_spark.dedup import minhash as mh
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
+        from hive_hdfs_practise_spark.plans.dedup import DELETE_NIBBLE
+        from hive_hdfs_practise_spark.sources.catalog import wide_table
+
+        sf = SF_DIR
+        d = wide_table(spark, sf, "documents").select("doc_id", "text")
+        kw = dict(downsample=4, family="md5")
+        mh.write_minhash_index(
+            spark, d, "minhash_spec_test_idx", n_buckets=8, **kw
+        )
+        nib = F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1)
+        deleted = d.where(nib == DELETE_NIBBLE)
+        bi.delete(deleted, "minhash_spec_test_idx", bi.MINHASH)
+        assert bi.vacuum(spark, "minhash_spec_test_idx", bi.MINHASH) > 0
+        table = "minhash_spec_test_idx_bands"
+        assert bi.bucket_spec(spark, table) == (["band", "band_key"], 8)
+        mh.append_minhash_index(spark, deleted, "minhash_spec_test_idx", **kw)
+        assert bi.bucket_spec(spark, table) == (["band", "band_key"], 8)
+        ids = {r.doc_id for r in spark.table(table).select("doc_id").collect()}
+        assert ids == {r.doc_id for r in d.select("doc_id").collect()}
 
 
 class TestChunkFuzzyPartialOverlap:

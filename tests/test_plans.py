@@ -104,9 +104,10 @@ def test_no_unintended_cartesian_products(spark):
     scalar cross joins must come through BroadcastNestedLoopJoin.
     Checkpoint-eager builders are skipped (covered by their own
     tests; building them here would execute real jobs)."""
+    import os
     import sys
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     from bench import BENCH_QUERIES
     from test_schemas import BUILD_EXECUTES
 

@@ -879,7 +879,7 @@ class TestIvfIndexAppend:
             return out
 
         before = snap()
-        append_ivf_index(spark, delta, "ivf_append_test_idx", nlist=8)
+        append_ivf_index(spark, delta, "ivf_append_test_idx")
         after = snap()
         for path, digest in before.items():
             assert after.get(path) == digest, path
@@ -940,10 +940,7 @@ class TestIvfIndexCompact:
             spark, e.filter(nib != "0"), "ivf_cpt_test_idx",
             nlist=IVF_NLIST, iters=IVF_ITERS,
         )
-        append_ivf_index(
-            spark, e.filter(nib == "0"), "ivf_cpt_test_idx",
-            nlist=IVF_NLIST,
-        )
+        append_ivf_index(spark, e.filter(nib == "0"), "ivf_cpt_test_idx")
         table = "ivf_cpt_test_idx_assign"
         before = {
             (r.vec_id, r.cluster_id)
@@ -994,8 +991,8 @@ class TestIvfIndexDelete:
             IVF_NLIST,
             IVF_NPROBE,
         )
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
         from hive_hdfs_practise_spark.similarity.knn import (
-            delete_from_ivf_index,
             knn_ivf_indexed,
             write_ivf_index,
         )
@@ -1025,14 +1022,13 @@ class TestIvfIndexDelete:
         before = {
             t: snap(f"ivf_del_test_idx_{t}") for t in ("assign", "centroids")
         }
-        delete_from_ivf_index(spark, deleted, "ivf_del_test_idx")
+        bi.delete(deleted, "ivf_del_test_idx", bi.IVF)
         for t, b in before.items():
             assert snap(f"ivf_del_test_idx_{t}") == b, t
         # probing with a deleted query vector raises; probes from any
         # kept query never return a deleted id
         df = knn_ivf_indexed(
-            spark, "ivf_del_test_idx", 0, 50,
-            nprobe=IVF_NLIST, tombstones=True,
+            spark, "ivf_del_test_idx", 0, 50, nprobe=IVF_NLIST
         )
         got = {r.vec_id for r in df.collect()}
         assert got and not (got & del_ids)
@@ -1040,14 +1036,11 @@ class TestIvfIndexDelete:
         import pytest as _pytest
 
         with _pytest.raises(KeyError):
-            knn_ivf_indexed(
-                spark, "ivf_del_test_idx", some_deleted, 5, tombstones=True
-            )
+            knn_ivf_indexed(spark, "ivf_del_test_idx", some_deleted, 5)
         # plan: pruned + exchange-free with the tombstone anti-join on
         plan = (
             knn_ivf_indexed(
-                spark, "ivf_del_test_idx", 0,
-                nprobe=IVF_NPROBE, tombstones=True,
+                spark, "ivf_del_test_idx", 0, nprobe=IVF_NPROBE
             )
             ._jdf.queryExecution()
             .executedPlan()
@@ -1055,6 +1048,34 @@ class TestIvfIndexDelete:
         )
         assert f"SelectedBucketsCount: {IVF_NPROBE} out of" in plan
         assert "Exchange hashpartitioning" not in plan
+
+    def test_default_probe_excludes_deleted(self, spark):
+        """Probes take no tombstone flag: a default-argument probe of
+        an index with live tombstones returns no deleted id."""
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
+        from hive_hdfs_practise_spark.plans.similarity import (
+            IVF_DELETE_NIBBLE,
+            IVF_NLIST,
+        )
+        from hive_hdfs_practise_spark.similarity.knn import (
+            knn_ivf_indexed,
+            write_ivf_index,
+        )
+        from hive_hdfs_practise_spark.sources.catalog import wide_table
+
+        e = wide_table(spark, SF, "embeddings")
+        write_ivf_index(spark, e, "ivf_dflt_test_idx", nlist=IVF_NLIST)
+        nib = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
+        deleted = e.where(nib == IVF_DELETE_NIBBLE).select("vec_id")
+        del_ids = {r.vec_id for r in deleted.collect()}
+        bi.delete(deleted, "ivf_dflt_test_idx", bi.IVF)
+        got = {
+            r.vec_id
+            for r in knn_ivf_indexed(
+                spark, "ivf_dflt_test_idx", 0, 1000, nprobe=IVF_NLIST
+            ).collect()
+        }
+        assert got and not (got & del_ids)
 
 
 class TestIvfIndexVacuum:
@@ -1077,10 +1098,9 @@ class TestIvfIndexVacuum:
             IVF_NLIST,
             IVF_NPROBE,
         )
+        from hive_hdfs_practise_spark.operators import bucketed_index as bi
         from hive_hdfs_practise_spark.similarity.knn import (
-            delete_from_ivf_index,
             knn_ivf_indexed,
-            vacuum_ivf_index,
             write_ivf_index,
         )
         from hive_hdfs_practise_spark.sources.catalog import wide_table
@@ -1093,7 +1113,7 @@ class TestIvfIndexVacuum:
         nib = F.substring(F.md5(F.col("vec_id").cast("string")), 1, 1)
         deleted = e.where(nib == IVF_DELETE_NIBBLE).select("vec_id")
         del_ids = {r.vec_id for r in deleted.collect()}
-        delete_from_ivf_index(spark, deleted, "ivf_vac_test_idx")
+        bi.delete(deleted, "ivf_vac_test_idx", bi.IVF)
         table = "ivf_vac_test_idx_assign"
         path = table_location(spark, table)
         # which buckets hold tombstoned rows (ground truth from data)
@@ -1120,12 +1140,11 @@ class TestIvfIndexVacuum:
         before_probe = {
             (r.vec_id, r.cosine)
             for r in knn_ivf_indexed(
-                spark, "ivf_vac_test_idx", 0, 50,
-                nprobe=IVF_NLIST, tombstones=True,
+                spark, "ivf_vac_test_idx", 0, 50, nprobe=IVF_NLIST
             ).collect()
         }
         before_files = snap()
-        n = vacuum_ivf_index(spark, "ivf_vac_test_idx", n_buckets=IVF_NLIST)
+        n = bi.vacuum(spark, "ivf_vac_test_idx", bi.IVF)
         assert n == len(del_ids) > 0
         assert not spark.catalog.tableExists("ivf_vac_test_idx_dels")
         after_files = snap()
@@ -1153,7 +1172,7 @@ class TestIvfIndexVacuum:
         }
         assert after_probe == before_probe and after_probe
         # (e) idempotent; (f) plan still pruned + exchange-free
-        assert vacuum_ivf_index(spark, "ivf_vac_test_idx", IVF_NLIST) == 0
+        assert bi.vacuum(spark, "ivf_vac_test_idx", bi.IVF) == 0
         plan = (
             knn_ivf_indexed(
                 spark, "ivf_vac_test_idx", 0, nprobe=IVF_NPROBE

@@ -1524,9 +1524,7 @@ class TestStreamIvfIndexAppend:
             if n == 0:
                 return
             batches.append(n)
-            append_ivf_index(
-                spark, bdf, "ivf_strm_test_idx", nlist=IVF_NLIST
-            )
+            append_ivf_index(spark, bdf, "ivf_strm_test_idx")
 
         q = (
             stream.writeStream.foreachBatch(_append)

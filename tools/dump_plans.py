@@ -8,9 +8,10 @@ is reviewable without running Spark.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 NODE_RE = re.compile(
     r"^(?P<indent>[\s:+*-]*)(?P<node>(?:\*\(\d+\)\s*)?[A-Za-z][A-Za-z0-9]+)"

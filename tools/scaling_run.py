@@ -13,11 +13,12 @@ after TIMEOUT_S and records the query as over-budget.
 
 from __future__ import annotations
 
+import os
 import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import BENCH_QUERIES
 from hive_hdfs_practise_spark import plans

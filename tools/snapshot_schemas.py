@@ -8,9 +8,10 @@ the driver's smoke check requires stable schemas across rounds.
 from __future__ import annotations
 
 import json
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hive_hdfs_practise_spark import plans
 from hive_hdfs_practise_spark.session import get_spark
