@@ -59,11 +59,14 @@ def minhash_family(sf_dir: str) -> str:
     tests/test_dedup.py::TestFamilyParity), so the gate trades only
     hash cost, not semantics.
 
-    Selection: explicit ``SPARK_GRAFT_MINHASH_FAMILY`` env override,
-    else by local corpus size (md5 for small/correctness corpora,
+    Selection: explicit ``SPARK_GRAFT_MINHASH_FAMILY`` env override
+    (any other non-empty value raises ``ValueError``), else by local
+    corpus size (md5 for small/correctness corpora,
     xxhash for bench/scale); non-local paths default to xxhash."""
     fam = os.environ.get(_FAMILY_ENV, "")
-    if fam in ("md5", "xxhash"):
+    if fam:
+        if fam not in ("md5", "xxhash"):
+            raise ValueError(f"{_FAMILY_ENV} must be 'md5' or 'xxhash', got {fam!r}")
         return fam
     target = os.path.join(sf_dir, "documents.parquet")
     try:
@@ -114,83 +117,47 @@ def shingle_hash(col: Column, family: str) -> Column:
     raise ValueError(f"unknown minhash family: {family}")
 
 
-def md5_shingle_hash_sql(expr: str) -> str:
-    """DuckDB twin of ``shingle_hash(_, 'md5')``: nibble-sum of the
-    first 8 md5 hex chars (== Spark's conv(substring(md5,1,8),16,10)),
-    mod P32. Dialect-neutral instr/substring arithmetic."""
-    u32 = " + ".join(
-        f"CAST(instr('0123456789abcdef', substring(md5({expr}), {p + 1}, 1)) - 1 "
+def hex_u32_sql(hex_expr: str, start: int = 1) -> str:
+    """The 8 hex chars of ``hex_expr`` from position ``start`` as an
+    unsigned 32-bit BIGINT: a nibble sum in dialect-neutral
+    instr/substring arithmetic, equal to Spark's
+    ``conv(substring(hex_expr, start, 8), 16, 10)``. DuckDB has no
+    ``conv``, so every oracle that restates an md5-derived u32 uses
+    this text."""
+    return "(" + " + ".join(
+        f"CAST(instr('0123456789abcdef', substring({hex_expr}, {start + p}, 1)) - 1 "
         f"AS BIGINT) * {1 << (4 * (7 - p))}"
         for p in range(8)
-    )
-    return f"(({u32}) % {P32})"
+    ) + ")"
+
+
+def md5_shingle_hash_sql(expr: str) -> str:
+    """SQL text of ``shingle_hash(_, 'md5')``: the first 8 md5 hex
+    chars of ``expr`` as a u32, mod P32. Runs in DuckDB and Spark."""
+    return f"({hex_u32_sql(f'md5({expr})')} % {P32})"
 
 
 def perm_min_sql(i: int, h: str = "h") -> str:
-    """DuckDB twin of one ``_perm_mins`` slot: min((a_i·h + b_i) mod
-    P32). Same coefficients, same non-negative operands, so plain
-    ``%`` matches Spark's. a < 2^31 and h < 2^32 keep the product in
-    signed-64 range on both engines."""
+    """SQL text of permutation slot ``i`` over the base hash ``h``:
+    min((a_i·h + b_i) mod P32). The one statement of the slot
+    formula: Spark signatures (``signature_sql``) and the DuckDB
+    oracles both use it. a < 2^31 and h < 2^32 keep the product in
+    signed-64 range and every operand non-negative, so plain ``%``
+    matches ``pmod`` at half the cost. There is no NULL guard: a NULL
+    ``h`` propagates through the arithmetic and ``min`` skips it."""
     a, b = _COEFFS[i]
     return f"min((CAST({a} AS BIGINT) * {h} + {b}) % {P32})"
 
 
-def minhash_signature_df(
-    df: DataFrame,
-    id_cols: list[str],
-    shingles_col: str = "shingles",
-    n_perm: int = _N_PERM_DEFAULT,
-    downsample: int = 1,
-    family: str = "xxhash",
-) -> DataFrame:
-    """(id_cols..., sig: array<bigint>[n_perm]) per input row.
-
-    Documents with an empty shingle set keep an all-P32 sentinel
-    signature (outer-join back) so they never band-collide.
-
-    ``downsample=d`` keeps only shingles whose hash ≡ 0 (mod d)
-    before the permutation mins — winnowing-style sketch-of-a-sketch
-    that cuts the aggregate's input d× while preserving the Jaccard
-    estimate (the sample is hash-uniform, so sampled-set Jaccard
-    concentrates around the true value). Only sound when documents
-    carry ≥ ~10·d shingles; high-similarity pairs survive intact
-    because they share the same sampled subset. Candidates are
-    exact-verified downstream either way."""
-    h = shingle_hash(F.col("_shingle"), family)
-    exploded = df.select(
-        *id_cols, F.explode_outer(F.col(shingles_col)).alias("_shingle")
-    ).withColumn("_h", h)
-    if downsample > 1:
-        # keep the null marker rows (empty docs) so groupBy retains them
-        exploded = exploded.filter(
-            F.col("_h").isNull() | (F.pmod(F.col("_h"), F.lit(downsample)) == 0)
-        )
-    agg = exploded.groupBy(*id_cols).agg(*_perm_mins(n_perm))
-    sig = F.array(
-        *[F.coalesce(F.col(f"_m{i}"), F.lit(P32).cast("bigint")) for i in range(n_perm)]
-    )
-    return agg.select(*id_cols, sig.alias("sig"))
-
-
-def _perm_mins(n_perm: int) -> list[Column]:
-    """The k permutation-min aggregate slots over ``_h``.
-
-    Deliberately minimal per-slot expression — this text is codegen'd
-    128× into one generated method, so every redundant node multiplies
-    compile time AND per-row cost:
-    - no ``when(isNotNull, ...)`` guard: ``a*NULL+b`` propagates NULL
-      and ``min()`` ignores NULLs natively, so empty-doc marker rows
-      fall through to an all-NULL group → sentinel via coalesce;
-    - ``%`` instead of ``pmod``: both operands are provably
-      non-negative (a,b < 2^31, _h < 2^32), where pmod costs two
-      remainders to fix a sign that can never be negative.
-    Measured on the sf0.1 corpus (all slots forced): 3.6s cold /
-    1.2s warm vs 8.1s / 3.8s for the guarded-pmod form — identical
-    signatures (checksum-equal)."""
-    return [
-        F.min((F.lit(a) * F.col("_h") + F.lit(b)) % F.lit(P32)).alias(f"_m{i}")
-        for i, (a, b) in enumerate(_COEFFS[:n_perm])
-    ]
+def signature_sql(h: str, n_perm: int = _N_PERM_DEFAULT) -> str:
+    """SQL text of the ``n_perm``-slot signature aggregate over base
+    hash ``h``: ``array(coalesce(<slot i>, P32), ...)``. A group whose
+    hashes are all NULL (an empty doc's marker row) gets the all-P32
+    sentinel. Emitted as one expression, so planning it from Python
+    takes a handful of py4j calls instead of thousands."""
+    return "array(" + ", ".join(
+        f"coalesce({perm_min_sql(i, h)}, {P32})" for i in range(n_perm)
+    ) + ")"
 
 
 def minhash_signature_from_text(
@@ -202,20 +169,26 @@ def minhash_signature_from_text(
     downsample: int = 1,
     family: str = "xxhash",
 ) -> DataFrame:
-    """Signature straight from text — no shingle ARRAY is ever built.
+    """(id_cols..., sig: array<bigint>[n_perm]) per input row, built
+    straight from text: no shingle ARRAY is ever built.
 
     MinHash over a multiset equals MinHash over the set (duplicate
-    shingles cannot change a minimum), so the array_distinct +
-    array-materialization step of the array-input path is pure
-    overhead for signatures. This path explodes shingle POSITIONS
-    and keeps everything — substring, hash, permutations, mins —
-    inside whole-stage codegen. Exact-Jaccard verification still
-    needs distinct shingle arrays; it builds them only for candidate
-    pairs.
+    shingles cannot change a minimum), so this explodes shingle
+    POSITIONS and keeps everything (substring, hash, permutations,
+    mins) inside whole-stage codegen. Exact-Jaccard verification
+    still needs distinct shingle arrays; it builds them only for
+    candidate pairs.
+
+    ``downsample=d`` keeps only shingles whose hash ≡ 0 (mod d)
+    before the permutation mins: a winnowing-style sketch of a sketch
+    that cuts the aggregate's input d× while preserving the Jaccard
+    estimate (the sample is hash-uniform). Only sound when documents
+    carry ≥ ~10·d shingles; candidates are exact-verified downstream
+    either way.
 
     Cardinality contract: with ``downsample=1`` the signature table
-    has EXACTLY one row per input doc (empty docs get a sentinel
-    signature via the NULL marker; pinned in tests). With
+    has EXACTLY one row per input doc (empty, short and NULL docs get
+    the all-P32 sentinel via the NULL marker; pinned in tests). With
     ``downsample>1`` a short doc whose every shingle hash fails the
     ``pmod(h, downsample)==0`` filter disappears from the table
     (~(1-1/d)^s chance for s shingles), silently excluding it from
@@ -239,18 +212,14 @@ def minhash_signature_from_text(
     # updates on BOTH codegen settings (sf0.1, all agg columns
     # forced): 4.7s vs 6.7s interpreted (maxFields=100 — the skipped
     # 75% of rows otherwise still pay 128 when() evaluations each),
-    # 4.4s vs 4.8s fused (maxFields≥129). An earlier measurement
-    # claiming the fold was 10× faster was an artifact of Catalyst
-    # pruning unread aggregate columns in the probe query.
+    # 4.4s vs 4.8s fused (maxFields≥129).
     if downsample > 1:
         exploded = exploded.filter(
             F.col("_h").isNull() | (F.pmod(F.col("_h"), F.lit(downsample)) == 0)
         )
-    agg = exploded.groupBy(*id_cols).agg(*_perm_mins(n_perm))
-    sig = F.array(
-        *[F.coalesce(F.col(f"_m{i}"), F.lit(P32).cast("bigint")) for i in range(n_perm)]
+    return exploded.groupBy(*id_cols).agg(
+        F.expr(signature_sql("_h", n_perm)).alias("sig")
     )
-    return agg.select(*id_cols, sig.alias("sig"))
 
 
 def lsh_candidate_pairs(

@@ -40,6 +40,8 @@ from ..functions import vectors as vec
 from ..operators import bucketed_index as bi
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K  # noqa: F401  (re-export)
+from .minhash_sql import agreement_col, agreement_sql
+from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes
 from .registry import register
 
 
@@ -171,29 +173,6 @@ from .constants import N_BANDS, N_PERM, ROWS_PER_BAND  # noqa: E402
 EST_MIN_MATCHES = math.ceil((JACCARD_THRESHOLD - 0.15) * N_PERM)
 
 
-# moved to plans/minhash_sql.py (registration-free — mining.py and
-# pipeline.py import it too); the alias keeps this module's oracles
-# reading as before
-from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes  # noqa: E402
-
-
-def _est_agreement_sql() -> str:
-    """SQL form of the signature-agreement match count between
-    aliases ``sa``/``sb`` (the _est_prefilter twin), shared by the
-    inline/indexed oracle and the delta-probe oracle so the two
-    cannot drift. Grouped in 8-term parenthesized chunks: a flat
-    128-term ``+`` chain parses left-deep and trips DuckDB's
-    128-deep binder recursion limit; grouping caps the tree depth
-    at ~24."""
-    terms = [
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END"
-        for i in range(N_PERM)
-    ]
-    return " + ".join(
-        "(" + " + ".join(terms[g : g + 8]) + ")" for g in range(0, N_PERM, 8)
-    )
-
-
 def _minhash_lsh_oracle(table: str = "documents", pre_ctes: str = "") -> str:
     """Full SQL restatement of dedup_minhash_lsh (md5 family):
     candidates → integer-form signature-agreement prefilter → exact
@@ -201,7 +180,6 @@ def _minhash_lsh_oracle(table: str = "documents", pre_ctes: str = "") -> str:
     relation so the detector-agreement audit / the index-delete
     certification can nest the identical text over a derived-docs
     CTE supplied via ``pre_ctes`` (r11)."""
-    est = _est_agreement_sql()
     return f"""
     WITH {pre_ctes}{_minhash_cand_ctes(table, downsample=4, lang=False)},
     mh_est AS (
@@ -209,7 +187,7 @@ def _minhash_lsh_oracle(table: str = "documents", pre_ctes: str = "") -> str:
         FROM mh_cand c
         JOIN mh_sigs sa ON sa.doc_id = c.doc_a
         JOIN mh_sigs sb ON sb.doc_id = c.doc_b
-        WHERE {est} >= {EST_MIN_MATCHES}
+        WHERE {agreement_sql()} >= {EST_MIN_MATCHES}
     ),
     fsh AS (
         SELECT doc_id,
@@ -325,15 +303,7 @@ def _est_prefilter(cand: DataFrame, sigs: DataFrame) -> DataFrame:
     dedup_minhash_lsh)."""
     sig_a = sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a"))
     sig_b = sigs.select(F.col("doc_id").alias("doc_b"), F.col("sig").alias("sig_b"))
-    est = F.aggregate(
-        F.zip_with(
-            F.col("sig_a"),
-            F.col("sig_b"),
-            lambda x, y: F.when(x == y, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    ) / F.lit(N_PERM)
+    est = agreement_col() / F.lit(N_PERM)
     return (
         cand.join(sig_a, "doc_a")
         .join(sig_b, "doc_b")
@@ -426,7 +396,6 @@ def _minhash_probe_oracle() -> str:
     bands — never delta×delta: new-batch-internal dedup is the
     streaming twin's job), then the shared agreement prefilter and
     exact-Jaccard verify."""
-    est = _est_agreement_sql()
     d_chain = _minhash_cand_ctes(
         "delta_docs", downsample=4, lang=False, prefix="d_",
         emit_cand=False,
@@ -452,7 +421,7 @@ def _minhash_probe_oracle() -> str:
         FROM pr_cand p
         JOIN d_sigs sa ON sa.doc_id = p.doc_new
         JOIN c_sigs sb ON sb.doc_id = p.doc_corpus
-        WHERE {est} >= {EST_MIN_MATCHES}
+        WHERE {agreement_sql()} >= {EST_MIN_MATCHES}
     ),
     fsh AS (
         SELECT doc_id,
@@ -743,7 +712,6 @@ def _dedup_cost_oracle() -> str:
     verify stanza is the shared verified_pairs_ctes (r10 review)."""
     from .minhash_sql import verified_pairs_ctes
 
-    est = _est_agreement_sql()
     return f"""
     WITH RECURSIVE {_minhash_cand_ctes("documents", downsample=4, lang=False)},
     bux AS (
@@ -766,7 +734,7 @@ def _dedup_cost_oracle() -> str:
         FROM mh_cand c
         JOIN mh_sigs sa ON sa.doc_id = c.doc_a
         JOIN mh_sigs sb ON sb.doc_id = c.doc_b
-        WHERE {est} >= {EST_MIN_MATCHES}
+        WHERE {agreement_sql()} >= {EST_MIN_MATCHES}
     ),
     np AS (SELECT count(*) AS n_prefilter FROM pre),
     {verified_pairs_ctes("pre")},
@@ -1003,7 +971,8 @@ def exact_jaccard_pairs(cand: DataFrame, docs: DataFrame) -> DataFrame:
     re-built each doc's shingle array ~5× per candidate row inside the
     join condition (plans/r13/dedup_cross_source_matrix_before.txt;
     measured 6.3 → 3.8 s on the 10× verify stage,
-    tools/probe_verify_inline.py; output parity exact)."""
+    tools/probe_verify_inline.py, last present at c128916; output
+    parity exact)."""
     txt_a = docs.select(F.col("doc_id").alias("doc_a"), F.col("text").alias("text_a"))
     txt_b = docs.select(F.col("doc_id").alias("doc_b"), F.col("text").alias("text_b"))
     sh_a = tx.char_shingles(F.col("text_a"), SHINGLE_K)

@@ -1,11 +1,14 @@
-"""SQL restatement of the md5-family MinHash-LSH candidate
-generator, registration-free (the _minhash_cand_ctes generator used
-to live in plans/dedup.py, but dedup.py REGISTERS queries at import
-time, and three other modules need this text — the cross-module rule
-in plans/constants.py's docstring applies to shared functions exactly
-as it does to constants)."""
+"""Registration-free SQL for the md5-family MinHash pipeline: the
+candidate CTE chain, the exact-verify stanza and the signature
+agreement count (plus its Spark form). plans/dedup.py registers
+queries at import time and several plan modules need this text, so
+it lives here (the cross-module rule in plans/constants.py's
+docstring applies to shared functions as it does to constants)."""
 
 from __future__ import annotations
+
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 
 from ..dedup import minhash as mh
 from .constants import (
@@ -110,3 +113,31 @@ def verified_pairs_ctes(cand: str) -> str:
                        - len(list_intersect(a.shingles, b.shingles))), 6)
               >= {JACCARD_THRESHOLD}
     )"""
+
+
+def agreement_sql() -> str:
+    """SQL count of the signature slots on which aliases ``sa`` and
+    ``sb`` agree (columns m0..m{N_PERM-1}); ``agreement_col`` is the
+    Spark form. Grouped in 8-term parenthesized chunks: a flat
+    128-term ``+`` chain parses left-deep and trips DuckDB's 128-deep
+    binder recursion limit; grouping caps the tree depth at ~24."""
+    terms = [
+        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(N_PERM)
+    ]
+    return " + ".join(
+        "(" + " + ".join(terms[g : g + 8]) + ")" for g in range(0, N_PERM, 8)
+    )
+
+
+def agreement_col() -> Column:
+    """Count of equal slots between signature columns ``sig_a`` and
+    ``sig_b``, as a ``zip_with``/``aggregate`` fold (interpreted, but
+    it runs on candidate pairs only; a codegen'd 128-term sum measured
+    2× slower, OPTIMIZATION_r13.md)."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("sig_a"), F.col("sig_b"), lambda x, y: F.when(x == y, 1).otherwise(0)
+        ),
+        F.lit(0),
+        lambda acc, v: acc + v,
+    )

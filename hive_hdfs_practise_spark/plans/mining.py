@@ -26,7 +26,6 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..dedup.minhash import (  # registration-free
-    _perm_mins,
     lsh_candidate_pairs,
     md5_shingle_hash_sql,
     minhash_family,
@@ -34,10 +33,12 @@ from ..dedup.minhash import (  # registration-free
     pairs_within_buckets,
     perm_min_sql,
     shingle_hash,
+    signature_sql,
 )
 from ..operators.graph import copurchase_edges, trade_pairs, undirected
 from ..sources.catalog import table, wide_table
 from .constants import JACCARD_THRESHOLD, SHINGLE_K
+from .minhash_sql import agreement_col, agreement_sql, minhash_cand_ctes
 from .registry import register
 
 # Jaccard >= 0.7 as exact integer predicates (10·inter >= 7·union,
@@ -1352,23 +1353,14 @@ def _containment_minhash_oracle() -> str:
     candidate CTE chain (lang-blocked) → integer slot-agreement count
     → exact distinct-shingle sizes → both direction thresholds."""
     from .constants import N_PERM
-    from .minhash_sql import minhash_cand_ctes as _minhash_cand_ctes
 
-    terms = [
-        f"CASE WHEN sa.m{i} = sb.m{i} THEN 1 ELSE 0 END" for i in range(N_PERM)
-    ]
-    # 8-term parenthesized chunks: a flat 128-term `+` chain trips
-    # DuckDB's binder recursion limit (the _minhash_lsh_oracle lesson)
-    est = " + ".join(
-        "(" + " + ".join(terms[g : g + 8]) + ")" for g in range(0, N_PERM, 8)
-    )
     return f"""
-    WITH {_minhash_cand_ctes("documents", downsample=4, lang=True)},
+    WITH {minhash_cand_ctes("documents", downsample=4, lang=True)},
     szs AS MATERIALIZED (
         SELECT doc_id, count(*) AS sz FROM mh_sh GROUP BY doc_id
     ),
     est AS MATERIALIZED (
-        SELECT c.doc_a, c.doc_b, {est} AS m, za.sz AS sz_a, zb.sz AS sz_b
+        SELECT c.doc_a, c.doc_b, {agreement_sql()} AS m, za.sz AS sz_a, zb.sz AS sz_b
         FROM mh_cand c
         JOIN mh_sigs sa ON sa.doc_id = c.doc_a
         JOIN mh_sigs sb ON sb.doc_id = c.doc_b
@@ -1439,15 +1431,6 @@ def documents_containment_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("sz"))
     )
-    m = F.aggregate(
-        F.zip_with(
-            F.col("sig_a"),
-            F.col("sig_b"),
-            lambda a, b: F.when(a == b, 1).otherwise(0),
-        ),
-        F.lit(0),
-        lambda acc, v: acc + v,
-    )
     base = (
         cand.join(
             sigs.select(F.col("doc_id").alias("doc_a"), F.col("sig").alias("sig_a")),
@@ -1465,7 +1448,7 @@ def documents_containment_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
             F.broadcast(szs.select(F.col("doc_id").alias("doc_b"), F.col("sz").alias("sz_b"))),
             "doc_b",
         )
-        .select("doc_a", "doc_b", m.alias("m"), "sz_a", "sz_b")
+        .select("doc_a", "doc_b", agreement_col().alias("m"), "sz_a", "sz_b")
     )
     # both directions from ONE pass over the candidate stream
     dirs = base.select(
@@ -1756,11 +1739,8 @@ def graph_link_prediction_minhash(spark: SparkSession, sf_dir: str) -> DataFrame
         "v", shingle_hash(F.col("w").cast("string"), family).alias("_h")
     )
     # every vertex has >= 1 neighbor (und comes from the edge list),
-    # so no empty-set sentinel is needed — the mins are never NULL
-    agg = hashed.groupBy("v").agg(*_perm_mins(LP_PERM))
-    sigs = agg.select(
-        "v", F.array(*[F.col(f"_m{i}") for i in range(LP_PERM)]).alias("sig")
-    )
+    # so the mins are never NULL and the sentinel coalesce is a no-op
+    sigs = hashed.groupBy("v").agg(F.expr(signature_sql("_h", LP_PERM)).alias("sig"))
     banded = sigs.select("v", F.posexplode("sig").alias("band", "band_key"))
     mcnt = (
         pairs_within_buckets(banded, "v", ["band", "band_key"], distinct=False)

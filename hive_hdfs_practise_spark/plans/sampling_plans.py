@@ -392,29 +392,14 @@ DECON_BLOOM_M = 1 << 20  # filter bits (16K sparse int64 words, <=128 KB)
 _DECON_SLICES = (1, 9, 17, 25)  # md5 hex offsets → k=4 hashes
 
 
-def _md5_u32_sql(expr: str, start: int) -> str:
-    """DuckDB twin of Spark's conv(substring(md5(e), start, 8), 16,
-    10): nibble-sum of 8 hex chars at ``start`` (the
-    md5_shingle_hash_sql idiom, offset-parameterized)."""
-    return (
-        "("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substring(md5({expr}), {start + p}, 1)) - 1 "
-            f"AS BIGINT) * {1 << (4 * (7 - p))}"
-            for p in range(8)
-        )
-        + ")"
-    )
-
-
 def _bloom_decon_oracle() -> str:
     m = DECON_BLOOM_M
     pos_arms = " ".join(
-        f"WHEN {j} THEN {_md5_u32_sql('g', s)} % {m}"
+        f"WHEN {j} THEN {mh.hex_u32_sql('md5(g)', s)} % {m}"
         for j, s in enumerate(_DECON_SLICES)
     )
     te_pos_union = "\n        UNION ALL ".join(
-        f"SELECT {_md5_u32_sql('g', s)} % {m} AS pos FROM te_g"
+        f"SELECT {mh.hex_u32_sql('md5(g)', s)} % {m} AS pos FROM te_g"
         for s in _DECON_SLICES
     )
     return rf"""
@@ -692,15 +677,7 @@ def documents_lang_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
 # threshold. md5-derived u makes membership deterministic across
 # engines, runs, and partitionings.
 WSAMPLE_K = 50
-_U32 = (
-    "("
-    + " + ".join(
-        "CAST(instr('0123456789abcdef', substring(md5(CAST(doc_id AS VARCHAR)),"
-        f" {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-        for p in range(8)
-    )
-    + ")"
-)
+_U32 = mh.hex_u32_sql("md5(CAST(doc_id AS VARCHAR))")
 
 
 @register(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..dedup.minhash import hex_u32_sql
 from ..functions import vectors as vec
 from ..sources.catalog import table, wide_table
 from .registry import register
@@ -184,16 +185,8 @@ def md5_u32_col(col) -> "F.Column":
 
 def _md5_u32_sql(expr: str) -> str:
     """First 8 md5 hex nibbles of ``expr`` as a 32-bit unsigned int
-    (dialect-neutral; matches Spark's conv(substring(md5(..),1,8),
-    16,10) — ``md5_u32_col`` is the Spark twin)."""
-    return (
-        "("
-        + " + ".join(
-            f"CAST(instr('0123456789abcdef', substring(md5({expr}), {p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-            for p in range(8)
-        )
-        + ")"
-    )
+    (``md5_u32_col`` is the Spark form)."""
+    return hex_u32_sql(f"md5({expr})")
 
 
 def _lsh_bucket_ctes() -> str:

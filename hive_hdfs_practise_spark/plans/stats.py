@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..dedup.minhash import hex_u32_sql
 from ..sources.catalog import table, wide_table
 from .registry import register
 
@@ -302,15 +303,6 @@ def lineitem_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
 # and merge order, so two engines (or two clusters) agree bit-for-bit
 # iff the row sets match. Value columns are folded in as integer
 # cents so float formatting can't enter the canonical string.
-_CKSUM_U32 = (
-    "("
-    + " + ".join(
-        "CAST(instr('0123456789abcdef', substring({h}, "
-        f"{p + 1}, 1)) - 1 AS BIGINT) * {1 << (4 * (7 - p))}"
-        for p in range(8)
-    )
-    + ")"
-)
 
 
 @register(
@@ -324,7 +316,7 @@ _CKSUM_U32 = (
         FROM lineitem
     )
     SELECT count(*) AS n_rows,
-           CAST(sum({_CKSUM_U32.format(h='h')}) AS BIGINT) AS checksum
+           CAST(sum({hex_u32_sql('h')}) AS BIGINT) AS checksum
     FROM c
     """,
 )

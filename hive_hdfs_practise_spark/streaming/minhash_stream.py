@@ -86,7 +86,7 @@ STATE_SCHEMA = T.StructType(
 # Arrow/state-store round-trip dominated the whole query (54.5 s at 10×,
 # guide §4: the boundary crossing count, not the work, was the cost).
 # Sharding the band_key space hashes every bucket of a band into one of
-# N_STATE_SHARDS coarse groups (16×256 = 4096 state rows at ANY corpus
+# ``state_shards()`` coarse groups (16×256 = 4096 state rows at ANY corpus
 # size), and the per-bucket pairing happens dict-side inside the group.
 # Bucket membership is a function of (band, band_key) exactly as before,
 # so the candidate set is unchanged. xxhash64 here is internal state
@@ -100,9 +100,27 @@ STATE_SCHEMA = T.StructType(
 # against a large accumulated state) pays O(state/shard) per touched
 # shard per trigger and should raise the shard count (env below) toward
 # per-bucket granularity — the trade is dispatch count vs row size.
-N_STATE_SHARDS = int(
-    os.environ.get("SPARK_GRAFT_STREAM_STATE_SHARDS", "") or 256
-)
+_SHARDS_ENV = "SPARK_GRAFT_STREAM_STATE_SHARDS"
+_SHARDS_DEFAULT = 256
+
+
+def state_shards() -> int:
+    """The state shard count: ``SPARK_GRAFT_STREAM_STATE_SHARDS`` if
+    set and non-empty, else 256. Anything but a positive integer
+    raises ``ValueError`` here, at build time: 0 would otherwise fail
+    inside the running stream (``pmod`` by zero) and a negative count
+    would yield non-positive shard keys."""
+    raw = os.environ.get(_SHARDS_ENV, "")
+    if not raw:
+        return _SHARDS_DEFAULT
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        raise ValueError(f"{_SHARDS_ENV} must be a positive integer, got {raw!r}")
+    return n
+
 
 _A = np.array([a for a, _ in _COEFFS[:N_PERM]], dtype=np.int64)[:, None]
 _B = np.array([b for _, b in _COEFFS[:N_PERM]], dtype=np.int64)[:, None]
@@ -277,7 +295,7 @@ def minhash_candidates(docs: DataFrame) -> DataFrame:
         signature_bands, schema=BANDED_SCHEMA
     )
     sharded = banded.withColumn(
-        "shard", F.pmod(F.xxhash64("band_key"), F.lit(N_STATE_SHARDS))
+        "shard", F.pmod(F.xxhash64("band_key"), F.lit(state_shards()))
     )
     return sharded.groupBy("band", "shard").applyInPandasWithState(
         _collide,

@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hive_hdfs_practise_spark.dedup.minhash import lsh_bands, minhash_signature_df
+from hive_hdfs_practise_spark.dedup.minhash import lsh_bands, minhash_signature_from_text
 from hive_hdfs_practise_spark.functions import text as tx
 from hive_hdfs_practise_spark import plans
 
@@ -55,8 +55,11 @@ class TestExact:
 
 class TestMinHash:
     def test_identical_docs_identical_signatures(self, docs):
-        d = docs.select("doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles"))
-        sigs = {r.doc_id: r.sig for r in minhash_signature_df(d, ["doc_id"]).collect()}
+        d = docs.select("doc_id", "text")
+        sigs = {
+            r.doc_id: r.sig
+            for r in minhash_signature_from_text(d, ["doc_id"], "text", 5).collect()
+        }
         assert sigs[0] == sigs[1]
         assert sigs[0] != sigs[3]
         # near-dup signatures agree on most permutations (j≈0.95)
@@ -64,8 +67,8 @@ class TestMinHash:
         assert agree > 0.7
 
     def test_bands_collide_for_near_dups(self, docs):
-        d = docs.select("doc_id", tx.char_shingles(F.col("text"), 5).alias("shingles"))
-        sigs = minhash_signature_df(d, ["doc_id"])
+        d = docs.select("doc_id", "text")
+        sigs = minhash_signature_from_text(d, ["doc_id"], "text", 5)
         bands = {
             r.doc_id: r.b
             for r in sigs.select(
@@ -81,8 +84,6 @@ class TestMinHash:
         # empty/short ones — gets exactly one signature row; at
         # downsample>1 short docs may drop out (probabilistic-recall
         # contract), so the table is never LARGER than the corpus.
-        from hive_hdfs_practise_spark.dedup.minhash import minhash_signature_from_text
-
         docs = spark.createDataFrame(
             [(1, "abcdefghij"), (2, ""), (3, "abc"), (4, None), (5, "xy")],
             "doc_id long, text string",
@@ -116,6 +117,95 @@ class TestMinHash:
         )
         lsh_same_lang = {p for p in lsh if langs[p[0]] == langs[p[1]]}
         assert lsh_same_lang == brute  # same threshold, full recall here
+
+
+class TestXxhashSignature:
+    """The xxhash-family signature pinned value by value: per-shingle
+    base hashes come from the JVM, the permutation mins from numpy
+    over the same coefficients, at downsample 1 and 4, including the
+    empty, short and NULL docs that get the all-P32 sentinel."""
+
+    ROWS = [
+        (1, BASE), (2, NEAR), (3, FAR), (4, ""), (5, "abc"),
+        (6, None), (7, "abcde"), (8, "abcdefgh"),
+    ]
+
+    @staticmethod
+    def _shingles(text, k):
+        return {text[i : i + k] for i in range(len(text) - k + 1)}
+
+    def _expected(self, base, downsample, k, n_perm):
+        import numpy as np
+
+        from hive_hdfs_practise_spark.dedup.minhash import P32, _COEFFS
+
+        a = np.array([c[0] for c in _COEFFS[:n_perm]], dtype=np.int64)[:, None]
+        b = np.array([c[1] for c in _COEFFS[:n_perm]], dtype=np.int64)[:, None]
+        want = {}
+        for doc_id, text in self.ROWS:
+            if text is None or len(text) < k:
+                want[doc_id] = [P32] * n_perm
+                continue
+            hs = [base[s] for s in self._shingles(text, k) if base[s] % downsample == 0]
+            if hs:  # a doc whose every shingle is winnowed away drops out
+                x = np.array(hs, dtype=np.int64)[None, :]
+                want[doc_id] = [int(v) for v in ((a * x + b) % P32).min(axis=1)]
+        return want
+
+    @pytest.mark.parametrize("downsample", [1, 4])
+    def test_matches_numpy_mins(self, spark, downsample):
+        from hive_hdfs_practise_spark.dedup.minhash import P32
+
+        k, n_perm = 5, 128
+        vocab = sorted(
+            set().union(*(self._shingles(t, k) for _, t in self.ROWS if t))
+        )
+        base = {
+            r.s: r.h
+            for r in spark.createDataFrame([(s,) for s in vocab], "s string")
+            .select("s", F.pmod(F.xxhash64("s"), F.lit(P32)).alias("h"))
+            .collect()
+        }
+        docs = spark.createDataFrame(self.ROWS, "doc_id long, text string")
+        got = {
+            r.doc_id: list(r.sig)
+            for r in minhash_signature_from_text(
+                docs, ["doc_id"], "text", k, n_perm, downsample, family="xxhash"
+            ).collect()
+        }
+        want = self._expected(base, downsample, k, n_perm)
+        assert got == want
+        assert {1, 2, 3} <= set(want)
+
+
+class TestFamilyEnv:
+    """``SPARK_GRAFT_MINHASH_FAMILY`` accepts md5, xxhash, or unset/
+    empty (size gate); anything else is rejected loudly instead of
+    silently falling through to the gate."""
+
+    @pytest.fixture
+    def small_corpus(self, tmp_path):
+        (tmp_path / "documents.parquet").write_bytes(b"x" * 1024)
+        return str(tmp_path)
+
+    @pytest.mark.parametrize("value", ["MD5", "sha1", " xxhash"])
+    def test_unknown_family_raises(self, monkeypatch, small_corpus, value):
+        from hive_hdfs_practise_spark.dedup.minhash import minhash_family
+
+        monkeypatch.setenv("SPARK_GRAFT_MINHASH_FAMILY", value)
+        with pytest.raises(ValueError, match="SPARK_GRAFT_MINHASH_FAMILY"):
+            minhash_family(small_corpus)
+
+    def test_unset_and_empty_keep_size_gate(self, monkeypatch, small_corpus, tmp_path):
+        from hive_hdfs_practise_spark.dedup.minhash import minhash_family
+
+        monkeypatch.delenv("SPARK_GRAFT_MINHASH_FAMILY", raising=False)
+        assert minhash_family(small_corpus) == "md5"
+        assert minhash_family(str(tmp_path / "missing")) == "xxhash"
+        monkeypatch.setenv("SPARK_GRAFT_MINHASH_FAMILY", "")
+        assert minhash_family(small_corpus) == "md5"
+        monkeypatch.setenv("SPARK_GRAFT_MINHASH_FAMILY", "xxhash")
+        assert minhash_family(small_corpus) == "xxhash"
 
 
 class TestFamilyParity:

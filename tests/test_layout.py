@@ -2,7 +2,9 @@
 
 ``write_bucketed`` is the only writer that chooses a bucketed layout,
 and ``operators/bucketed_index.py`` is the only module that knows the
-tombstone table, so a second copy of either decision fails here."""
+tombstone table, so a second copy of either decision fails here. The
+MinHash permutation coefficients are read only by the two signature
+engines (the SQL slot text and the numpy stream signatures)."""
 
 from __future__ import annotations
 
@@ -28,4 +30,11 @@ def test_bucket_by_only_in_writers():
 def test_tombstone_suffix_only_in_bucketed_index():
     assert _files_containing("_dels") == {
         "hive_hdfs_practise_spark/operators/bucketed_index.py"
+    }
+
+
+def test_minhash_coefficients_only_in_signature_engines():
+    assert _files_containing("_COEFFS") == {
+        "hive_hdfs_practise_spark/dedup/minhash.py",
+        "hive_hdfs_practise_spark/streaming/minhash_stream.py",
     }

@@ -12,7 +12,7 @@ import pandas as pd
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from hive_hdfs_practise_spark.dedup.minhash import minhash_signature_df
+from hive_hdfs_practise_spark.dedup.minhash import minhash_signature_from_text
 from hive_hdfs_practise_spark.functions import text as tx
 from hive_hdfs_practise_spark.operators.asof import asof_join
 
@@ -42,7 +42,10 @@ class TestMinhashEstimate:
         inter = len(rows[0] & rows[1])
         union = len(rows[0] | rows[1]) or 1
         true_j = inter / union
-        sigs = {r.doc_id: r.sig for r in minhash_signature_df(sh, ["doc_id"]).collect()}
+        sigs = {
+            r.doc_id: r.sig
+            for r in minhash_signature_from_text(df, ["doc_id"], "text", 4).collect()
+        }
         est = sum(x == y for x, y in zip(sigs[0], sigs[1])) / len(sigs[0])
         # 128 perms → std ≈ sqrt(j(1-j)/128) ≤ 0.045; allow 4σ
         assert abs(est - true_j) < 0.2

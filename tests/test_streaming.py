@@ -603,6 +603,33 @@ class TestStreamMinhashDedup:
         assert any(a <= split_at < b for a, b, _ in got)
 
 
+class TestStreamStateShardsEnv:
+    """``SPARK_GRAFT_STREAM_STATE_SHARDS`` must be a positive integer:
+    a bad value fails when the stream is built, naming the variable,
+    not inside the running query."""
+
+    @pytest.mark.parametrize("value", ["0", "-4", "many"])
+    def test_bad_value_raises_at_build(self, spark, monkeypatch, value):
+        from hive_hdfs_practise_spark.streaming.minhash_stream import (
+            minhash_candidates,
+        )
+
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", value)
+        docs = spark.createDataFrame([(1, "some text")], "doc_id long, text string")
+        with pytest.raises(ValueError, match="SPARK_GRAFT_STREAM_STATE_SHARDS"):
+            minhash_candidates(docs)
+
+    def test_unset_empty_and_valid(self, monkeypatch):
+        from hive_hdfs_practise_spark.streaming.minhash_stream import state_shards
+
+        monkeypatch.delenv("SPARK_GRAFT_STREAM_STATE_SHARDS", raising=False)
+        assert state_shards() == 256
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", "")
+        assert state_shards() == 256
+        monkeypatch.setenv("SPARK_GRAFT_STREAM_STATE_SHARDS", "1024")
+        assert state_shards() == 1024
+
+
 class TestStreamKmvDistinct:
     """r8: stream_kmv_distinct_users — the streaming KMV estimate
     equals the batch sketch on bounded input (mergeability), incl. a
